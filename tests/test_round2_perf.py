@@ -78,6 +78,23 @@ def test_planner_bcast_tier(spark):
     assert c.strategy == "bcast"
 
 
+def test_planner_bcast_override_clamped_to_hard_cap(spark):
+    """Every broadcast-CSR kernel packs ids into int32 / 31-bit keys, so a
+    conf override may not lift the cutoff past the hard cap."""
+    from triangle_counting_spark.plans.planner import (
+        BCAST_HARD_CAP_EDGES,
+        bcast_max_edges,
+    )
+
+    try:
+        spark.conf.set("spark.tcs.bcastMaxEdges", str(10**12))
+        assert bcast_max_edges(spark) == BCAST_HARD_CAP_EDGES
+        spark.conf.set("spark.tcs.bcastMaxEdges", "110000")
+        assert bcast_max_edges(spark) == 110000
+    finally:
+        spark.conf.unset("spark.tcs.bcastMaxEdges")
+
+
 def test_planner_beyond_memory_always_part(spark):
     """Round 4: beyond the memory cutoff, auto never gambles on the
     level split (its G1 wedge join exhausted shuffle disk at RMAT-22) —

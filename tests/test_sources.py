@@ -72,6 +72,53 @@ def test_files_skew_capping(spark):
     assert capped.count() == want
 
 
+def _repo_oracle(files, n_repos, seed):
+    """(repo per file id, Python inverse-CDF repo per file id) over the same
+    per-row uniform u the generator hashes from the id."""
+    import bisect
+
+    weights = [1.0 / (r + 1) ** 1.2 for r in range(n_repos)]
+    total, acc, cum = sum(weights), 0.0, []
+    for w in weights:
+        acc += w / total
+        cum.append(acc)
+    ids = files.select(
+        F.regexp_extract("path", r"file_(\d+)\.", 1).cast("long").alias("id"), "repo"
+    )
+    rows = ids.select(
+        "id", "repo",
+        (F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0).alias("u"),
+    ).collect()
+    want = {r.id: f"org/repo-{min(bisect.bisect_right(cum, r.u), n_repos - 1):04d}" for r in rows}
+    return {r.id: r.repo for r in rows}, want
+
+
+def test_files_repo_assignment_small_case_unchanged(spark):
+    """The flat threshold count assigns exactly what the per-repo CASE WHEN
+    ladder did: the first r with u < cum[r], else the last repo."""
+    files = synthetic_files(spark, n_files=400, n_repos=12, seed=42)
+    got, want = _repo_oracle(files, 12, 42)
+    assert got == want
+    # pinned: the repo sizes the CASE WHEN ladder produced for this case
+    sizes = [
+        r["cnt"]
+        for r in files.groupBy("repo").agg(F.count("*").alias("cnt")).orderBy("repo").collect()
+    ]
+    assert sizes == [160, 61, 46, 33, 27, 25, 14, 8, 7, 8, 8, 3]
+    row = files.where(F.col("path").endswith("file_000368.java")).collect()[0]
+    assert row.repo == "org/repo-0002"
+    assert row.commit == "b9469a95e64ad83017429739bd95b527100cdfec"
+
+
+def test_files_many_repos_complete(spark):
+    """400 repos used to overflow the driver stack building a nested
+    CASE WHEN; the flat count builds and assigns correctly."""
+    files = synthetic_files(spark, n_files=3000, n_repos=400, seed=3)
+    got, want = _repo_oracle(files, 400, 3)
+    assert len(got) == 3000 and got == want
+    assert len(set(got.values())) > 100
+
+
 def test_sha256_audit(spark):
     files = synthetic_files(spark, n_files=200, n_repos=8).cache()
     verts = file_vertices(files)

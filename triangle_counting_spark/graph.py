@@ -225,8 +225,8 @@ class Graph:
         return choose_iterative_tier(self.edges, assume_canonical=True)
 
     def pagerank(self, tier: str = "auto", **kw):
-        """tier: "auto" picks the CSR-blocked broadcast substrate while the
-        graph fits memory, else the shuffle substrate (identical semantics,
+        """tier: "auto" picks the CSR-blocked in-memory substrate while
+        the graph fits memory, else the shuffle substrate (identical semantics,
         cross-checked in tests).
 
         The facade is UNDIRECTED and UNWEIGHTED by construction:

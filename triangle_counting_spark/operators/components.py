@@ -74,7 +74,13 @@ def connected_components(
 
         tier = choose_iterative_tier(edges)
     if tier == "blocked":
-        return connected_components_blocked(edges, checkpoint_dir=checkpoint_dir)
+        return connected_components_blocked(
+            edges,
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            resume=resume,
+        )
 
     ce = canonical_edges(edges)
     # joined every iteration — persist once, pre-partitioned on SRC so only
@@ -180,13 +186,15 @@ def connected_components_blocked(
     resume: bool = True,
     assume_canonical: bool = False,
 ) -> LoopResult:
-    """CSR-blocked hash-min — the broadcast-tier CC.
+    """CSR-blocked hash-min — the in-memory CC.
 
-    Per round the blocks gather min neighbor labels (np.minimum.reduceat);
-    the driver then pointer-jumps the label vector to a fixpoint for FREE
-    (label = label[label] is a pure numpy gather on the in-memory vector),
-    so full convergence typically takes 2-3 Spark rounds regardless of
-    diameter. Same min-id fixpoint as :func:`connected_components`.
+    Collects the edge list once; every round then runs on the driver
+    (:func:`~triangle_counting_spark.plans.blocked.blocked_rounds`, no
+    Spark job): the blocks gather min neighbor labels
+    (np.minimum.reduceat) and the label vector is pointer-jumped to a
+    fixpoint (label = label[label], a numpy gather), so full convergence
+    typically takes 2-3 rounds regardless of diameter. Same min-id
+    fixpoint as :func:`connected_components`.
     """
     import numpy as np
     import pandas as pd

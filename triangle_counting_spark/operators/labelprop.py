@@ -120,18 +120,24 @@ def label_propagation_blocked(
     n_blocks: int | None = None,
     assume_canonical: bool = False,
 ) -> LoopResult:
-    """CSR-blocked synchronous label propagation — the broadcast tier.
+    """CSR-blocked synchronous label propagation — the in-memory tier.
 
-    Per round each dst-block computes the per-vertex neighbor-label vote
-    argmax fully vectorized: lexsort by (dst, label) → run-length counts →
-    lexsort runs by (dst, -count, label) → first run per dst wins. Same
-    (count desc, label asc) tie-break as the shuffle tier, so the two
-    implementations agree round for round (tested).
+    Collects the edge list once, then runs every round on the driver over
+    the :func:`~triangle_counting_spark.plans.blocked.build_blocked` blocks
+    (no Spark job per round). Per block the vote argmax is fully
+    vectorized: one in-place sort of int64 ``(dst << 32) | label`` keys
+    groups equal (dst, label) votes into runs; each run becomes the key
+    ``((2^31 - count) << 32) | label``, whose per-dst minimum
+    (np.minimum.reduceat) is the winner. Same (count desc, label asc)
+    tie-break as the shuffle tier, so the two implementations agree round
+    for round (tested). Compact ids stay below 2^31, so both keys fit.
     """
+    import time
+
     import numpy as np
     import pandas as pd
 
-    from ..plans.blocked import _ship_arrays, build_blocked
+    from ..plans.blocked import build_blocked
     from .orientation import canonical_edges as _canon
 
     spark = edges.sparkSession
@@ -144,67 +150,37 @@ def label_propagation_blocked(
     if n == 0:
         empty = spark.createDataFrame([], "v long, label long")
         return LoopResult(state=empty, iterations=0, converged=True, delta=0.0)
-    files = _ship_arrays(
-        spark, {"src": g.src, "dst": g.dst, "bounds": g.block_bounds}
-    )
 
-    def make_round(bc_state, _k):
-        def fn(batches):
-            from pyspark import SparkFiles  # noqa: PLC0415
-            import numpy as np  # noqa: PLC0415
-
-            arrs = {
-                name: np.asarray(np.load(SparkFiles.get(f), mmap_mode="r"))
-                for name, f in files.items()
-            }
-            s_, d_, bounds = arrs["src"], arrs["dst"], arrs["bounds"]
-            vec = bc_state.value
-            for b in batches:
-                for blk in b["id"].to_numpy():
-                    lo, hi = bounds[blk], bounds[blk + 1]
-                    if hi <= lo:
-                        yield pd.DataFrame({"dst": [], "val": []}).astype(
-                            {"dst": "int64", "val": "float64"}
-                        )
-                        continue
-                    dd = d_[lo:hi]
-                    lbl = vec[s_[lo:hi]]
-                    order = np.lexsort((lbl, dd))
-                    dd, lbl = dd[order], lbl[order]
-                    # run-length counts of (dst, label) pairs
-                    new_run = np.r_[
-                        True, (dd[1:] != dd[:-1]) | (lbl[1:] != lbl[:-1])
-                    ]
-                    starts = np.flatnonzero(new_run)
-                    cnts = np.diff(np.r_[starts, len(dd)])
-                    rd, rl = dd[starts], lbl[starts]
-                    # winner per dst: (count desc, label asc) → lexsort keys
-                    # reversed-significance: label, -count, dst
-                    w = np.lexsort((rl, -cnts, rd))
-                    rd, rl = rd[w], rl[w]
-                    first = np.flatnonzero(np.r_[True, rd[1:] != rd[:-1]])
-                    yield pd.DataFrame(
-                        {"dst": rd[first], "val": rl[first].astype(np.float64)}
-                    )
-
-        return fn
-
-    slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
+    low = np.int64(0xFFFFFFFF)
+    blocks = g.blocks()
+    width = max(hi - lo for lo, hi, _, _ in blocks)
+    key = np.empty(width, dtype=np.int64)
+    lbl = np.empty(width, dtype=np.int64)
     state = np.arange(n, dtype=np.int64)
+    new = state.copy()
     metrics: list[dict] = []
     converged = False
     i = 0
     for i in range(1, max_iter + 1):
-        bc_state = spark.sparkContext.broadcast(state)
-        out = slices.mapInPandas(
-            make_round(bc_state, n_blocks), schema="dst long, val double"
-        ).toPandas()
-        bc_state.destroy()
-        new = state.copy()
-        new[out["dst"].to_numpy(dtype=np.int64)] = out["val"].to_numpy(dtype=np.int64)
+        t0 = time.time()
+        for lo, hi, cut, rows in blocks:
+            k = key[: hi - lo]
+            np.take(state, g.src[lo:hi], out=lbl[: hi - lo], mode="clip")
+            np.left_shift(g.dst[lo:hi], 32, out=k, dtype=np.int64)
+            np.bitwise_or(k, lbl[: hi - lo], out=k)
+            k.sort()
+            # runs of equal (dst, label); every dst boundary starts a run,
+            # so the block's dst cuts map onto run indices exactly
+            runs = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+            cnt = np.diff(np.r_[runs, len(k)])
+            vote = ((np.int64(1 << 31) - cnt) << 32) | (k[runs] & low)
+            win = np.minimum.reduceat(vote, np.searchsorted(runs, cut))
+            new[rows] = win & low
+        # every vertex is some edge's dst, so ``new`` is fully rewritten
+        # each round and the two vectors can swap roles
         delta = int((new != state).sum())
-        state = new
-        metrics.append({"iteration": i, "delta": float(delta)})
+        state, new = new, state
+        metrics.append({"iteration": i, "delta": float(delta), "sec": time.time() - t0})
         if delta == 0:
             converged = True
             break

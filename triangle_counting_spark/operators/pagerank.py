@@ -254,11 +254,14 @@ def pagerank_blocked(
     assume_canonical: bool = False,
     weight_col: str | None = None,
 ):
-    """CSR-blocked PageRank — the broadcast-tier implementation
+    """CSR-blocked PageRank — the in-memory implementation
     (north rule: "iterative sparse gather-scatter over CSR-blocked edge
-    partitions"). Per iteration: broadcast the rank vector, each dst-block
-    gathers Σ rank(u)/outdeg(u) via np.add.reduceat, driver applies damping
-    + dangling mass and checks max |Δ| — no shuffle anywhere.
+    partitions"). Collects the edge list once; every iteration then runs
+    on the driver
+    (:func:`~triangle_counting_spark.plans.blocked.blocked_rounds`): each
+    dst-block gathers Σ rank(u)/outdeg(u) via np.add.reduceat, then
+    damping + dangling mass are applied and max |Δ| is checked — no
+    Spark job per iteration.
 
     Use when the per-vertex state vector fits in memory (~10^8 vertices);
     :func:`pagerank` is the beyond-memory shuffle tier with identical
@@ -289,7 +292,7 @@ def pagerank_blocked(
     if n_blocks is None:
         n_blocks = max(spark.sparkContext.defaultParallelism, 1)
     # the gather weight (1/outdeg or w/Σw) lives on the edges, so the
-    # broadcast state is the rank vector itself (checkpoint/resume stays
+    # iterated state is the rank vector itself (checkpoint/resume stays
     # trivially correct)
     g = build_blocked(
         pdf, n_blocks,

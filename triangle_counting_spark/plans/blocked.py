@@ -1,22 +1,26 @@
-"""CSR-blocked iteration — the broadcast-tier substrate for PageRank / CC /
+"""CSR-blocked iteration — the in-memory substrate for PageRank / CC /
 label propagation (north rule: "iterative sparse gather-scatter over
 CSR-blocked edge partitions").
 
 Tiering (mirrors the reference's plan choice by graph statistic,
 tc.c:1844-1911):
 
-- **blocked tier** (this module): the per-vertex STATE vector fits in
-  executor memory (8-16 B/vertex → ~10^8 vertices in a few GB). Edges are
-  partitioned once into P dst-disjoint CSR blocks that live as numpy arrays
-  inside long-lived Arrow tasks; each iteration broadcasts the state
-  vector, every block gathers contributions for its own dst range with
-  np.add.reduceat (vectorized, zero Python-per-row), and the driver
-  assembles + convergence-checks the next vector. Per-iteration cost:
-  1 broadcast + P map tasks + 1 small collect — NO shuffle at all.
+- **blocked tier** (this module): the graph fits the driver. The edge list
+  is collected once, compacted, symmetrized and cut into dst-disjoint CSR
+  blocks of about equal edge count (:func:`build_blocked`). Every round
+  runs on the driver: per block, gather the source states into a reused
+  buffer (np.take), weight them in place, segment-reduce per dst with
+  ``ufunc.reduceat`` and scatter into the gathered vector; the caller's
+  ``update`` then applies damping / pointer jumping and the convergence
+  test. A round launches NO Spark job: on a graph this size a numpy round
+  takes milliseconds, while a broadcast + P-task map + collect cost a
+  fixed ~0.4 s per round. Blocks run in a plain serial loop (a thread
+  pool's per-thread malloc arenas grew driver RSS pass over pass) and
+  only bound each round's temporaries by block size.
 - **shuffle tier** (operators/pagerank.py etc. + plans/iterate.py): state
   itself is distributed; one join + one aggregate per iteration. Used when
-  vertices don't fit a vector (10^11+), at the cost of per-iteration
-  shuffles.
+  the graph does not fit the driver (10^11+ vertices), at the cost of
+  per-iteration shuffles.
 
 Checkpoint/resume: the state vector + iteration meta are written as
 parquet via pyarrow every ``checkpoint_every`` iterations (atomic
@@ -31,7 +35,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+# symmetrized edges per block: bounds every round's temporaries (a gather
+# buffer of 512 KiB at float64) regardless of hub skew in the id order
+BLOCK_EDGES = 1 << 16
 
 
 @dataclass
@@ -39,21 +47,55 @@ class BlockedGraph:
     """Driver-resident compact graph: ids + per-block CSR over dst."""
 
     verts: np.ndarray  # sorted original vertex ids, index = compact id
-    src: np.ndarray  # compact src of SYMMETRIZED edges, grouped by dst-block
+    src: np.ndarray  # compact src of SYMMETRIZED edges, sorted by dst
     dst: np.ndarray
     out_deg: np.ndarray
     n_blocks: int
     block_bounds: np.ndarray  # edge-index boundaries per block (len n_blocks+1)
     weight: np.ndarray | None = None  # optional per-edge gather weight
 
+    def blocks(self) -> list[tuple[int, int, np.ndarray, np.ndarray]]:
+        """Per block ``(lo, hi, cut, rows)``: its edge range, the dst-run
+        starts relative to ``lo`` (``reduceat`` offsets) and the dst id of
+        each run. Block bounds sit on run starts, so no run straddles two
+        blocks."""
+        d = self.dst
+        runs = np.flatnonzero(np.r_[True, d[1:] != d[:-1]]) if len(d) else d[:0]
+        rows = d[runs].astype(np.intp)
+        out = []
+        for b in range(self.n_blocks):
+            lo, hi = int(self.block_bounds[b]), int(self.block_bounds[b + 1])
+            r0, r1 = np.searchsorted(runs, [lo, hi])
+            out.append((lo, hi, runs[r0:r1] - lo, rows[r0:r1]))
+        return out
+
+
+def _block_bounds(dst: np.ndarray, n_blocks: int) -> np.ndarray:
+    """Edge-index bounds of ``max(n_blocks, ceil(len(dst) / BLOCK_EDGES))``
+    blocks of equal edge count, each snapped back to the start of the dst
+    run it falls in. A hub whose run is longer than a block swallows the
+    bounds inside it, so the result may hold fewer blocks than targeted,
+    but never an empty one."""
+    e = len(dst)
+    if e == 0:
+        return np.zeros(1, dtype=np.int64)
+    target = max(n_blocks, -(-e // BLOCK_EDGES), 1)
+    pos = (np.arange(1, target, dtype=np.int64) * e) // target
+    snapped = np.searchsorted(dst, dst[pos], side="left")
+    return np.unique(np.r_[0, snapped, e]).astype(np.int64)
+
 
 def build_blocked(
     edges_pdf: pd.DataFrame, n_blocks: int, edge_weight: str | None = None
 ) -> BlockedGraph:
-    """Compact + symmetrize + sort edges by (block(dst), dst).
+    """Compact + symmetrize + sort edges by dst, then cut the edge array
+    into dst-disjoint blocks of about equal edge count.
 
     edges_pdf: canonical (src < dst) undirected edge list; for
     edge_weight="weighted" it must also carry a ``weight`` column.
+    n_blocks: the MINIMUM block count; graphs over ``n_blocks *
+    BLOCK_EDGES`` symmetrized edges get more, hubs may merge some (see
+    :func:`_block_bounds`) — iterate ``g.n_blocks``, never the argument.
     edge_weight: None, "inv_outdeg" (w = 1/outdeg(src) — plain PageRank),
     or "weighted" (w = weight/Σ_out weight — weighted PageRank; out_deg
     then holds the per-vertex out-STRENGTH, still 0 ⇔ dangling).
@@ -77,20 +119,17 @@ def build_blocked(
     else:
         sym_w = None
         out_deg = np.bincount(src, minlength=n).astype(np.float64)
-    # block(dst) is monotone in dst → a single stable argsort on dst gives
-    # block-grouped dst-sorted order (no lexsort needed)
+    # stable: within a dst run edges keep input order, so sums reduce in
+    # the same order on every run
     order = np.argsort(dst, kind="stable")
     src, dst = src[order], dst[order]
-    starts = ((np.arange(n_blocks + 1, dtype=np.int64) * n) + n_blocks - 1) // max(
-        n_blocks, 1
-    )
-    bounds = np.searchsorted(dst, np.minimum(starts, n))
+    bounds = _block_bounds(dst, n_blocks)
     weight = None
     if edge_weight == "inv_outdeg":
         weight = 1.0 / out_deg[src]
     elif edge_weight == "weighted":
         weight = sym_w[order] / out_deg[src]
-    return BlockedGraph(verts, src, dst, out_deg, n_blocks, bounds, weight)
+    return BlockedGraph(verts, src, dst, out_deg, len(bounds) - 1, bounds, weight)
 
 
 def blocked_rounds(
@@ -106,30 +145,16 @@ def blocked_rounds(
     fingerprint: str = "",
     resume: bool = True,
 ) -> tuple[np.ndarray, int, bool, list[dict]]:
-    """Run blocked gather-scatter rounds.
+    """Run blocked gather-scatter rounds on the driver.
 
     gather: "sum" (PageRank contributions) or "min" (hash-min CC).
-    update(state, gathered) -> (new_state, delta).
+    update(state, gathered) -> (new_state, delta); ``gathered`` is a buffer
+    reused by the next round, so update must not keep it. ``spark`` is
+    unused — a round launches no Spark job — and kept for callers.
     Returns (state, iterations, converged, metrics).
     """
     import time
 
-    # Ship the (large, immutable) graph arrays as .npy FILES + mmap, not as
-    # a pickled broadcast: a pickled 540 MB graph is unpickled into every
-    # python worker process (32 workers -> 17 GB RAM and a 100+ s first
-    # iteration, measured at RMAT-20). np.load(mmap_mode='r') keeps ONE
-    # page-cache copy per machine and loads in microseconds; sc.addFile
-    # distributes the files to executors on a real cluster.
-    graph_files = _ship_arrays(
-        spark,
-        {
-            "src": g.src,
-            "dst": g.dst,
-            "bounds": g.block_bounds,
-            **({"weight": g.weight} if g.weight is not None else {}),
-        },
-    )
-    n_blocks = g.n_blocks
     state = state0.copy()
     start_iter = 0
     metrics: list[dict] = []
@@ -142,61 +167,29 @@ def blocked_rounds(
             if meta.get("delta", float("inf")) <= tol:
                 return state, start_iter, True, metrics
 
-    mode_min = gather == "min"
+    ufunc = np.minimum if gather == "min" else np.add
+    fill = np.inf if gather == "min" else 0.0
+    # every buffer the gather touches is allocated here, once
+    blocks = g.blocks()
+    width = max((hi - lo for lo, hi, _, _ in blocks), default=0)
+    idx = np.empty(width, dtype=np.intp)  # np.take casts int32 indices per call otherwise
+    buf = np.empty(width, dtype=np.float64)
+    red = np.empty(max((len(c) for _, _, c, _ in blocks), default=0), dtype=np.float64)
+    gathered = np.empty(len(g.verts), dtype=np.float64)
 
-    def make_round(bc_state):
-        def fn(batches):
-            # load inline (NOT via the module-level helper): module
-            # functions pickle by reference and would require the package
-            # on every worker's import path
-            from pyspark import SparkFiles  # noqa: PLC0415
-            import numpy as np  # noqa: PLC0415
-
-            arrs = {
-                name: np.asarray(np.load(SparkFiles.get(f), mmap_mode="r"))
-                for name, f in graph_files.items()
-            }
-            s_, d_, bounds = arrs["src"], arrs["dst"], arrs["bounds"]
-            w_ = arrs.get("weight")
-            vec = bc_state.value
-            for b in batches:
-                for blk in b["id"].to_numpy():
-                    lo, hi = bounds[blk], bounds[blk + 1]
-                    if hi <= lo:
-                        yield pd.DataFrame({"dst": [], "val": []}).astype(
-                            {"dst": "int64", "val": "float64"}
-                        )
-                        continue
-                    dd = d_[lo:hi]
-                    contrib = vec[s_[lo:hi]]
-                    if w_ is not None:
-                        contrib = contrib * w_[lo:hi]
-                    # dst-sorted within block → segment reduce
-                    cut = np.flatnonzero(np.r_[True, dd[1:] != dd[:-1]])
-                    if mode_min:
-                        red = np.minimum.reduceat(contrib, cut)
-                    else:
-                        red = np.add.reduceat(contrib, cut)
-                    yield pd.DataFrame({"dst": dd[cut], "val": red})
-
-        return fn
-
-    # one slice id per partition (numPartitions=n_blocks) — NO repartition:
-    # an AQE shuffle here costs ~0.7 s per iteration for nothing
-    slices = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
     converged = False
     delta = float("inf")
     i = start_iter
     for i in range(start_iter + 1, max_iter + 1):
         t0 = time.time()
-        bc_state = spark.sparkContext.broadcast(state)
-        rows = slices.mapInPandas(make_round(bc_state), schema="dst long, val double")
-        pdf = rows.toPandas()
-        bc_state.destroy()
-        gathered = np.full(
-            len(g.verts), np.inf if mode_min else 0.0, dtype=np.float64
-        )
-        gathered[pdf["dst"].to_numpy(dtype=np.int64)] = pdf["val"].to_numpy()
+        gathered.fill(fill)
+        for lo, hi, cut, rows in blocks:
+            k = hi - lo
+            np.copyto(idx[:k], g.src[lo:hi])
+            vals = np.take(state, idx[:k], out=buf[:k], mode="clip")
+            if g.weight is not None:
+                np.multiply(vals, g.weight[lo:hi], out=vals)
+            gathered[rows] = ufunc.reduceat(vals, cut, out=red[: len(cut)])
         state, delta = update(state, gathered)
         m = {"iteration": i, "delta": float(delta), "sec": time.time() - t0}
         if checkpoint_dir and (i % checkpoint_every == 0 or delta <= tol):
@@ -213,7 +206,9 @@ def _ship_arrays(spark: SparkSession, arrays: dict[str, np.ndarray]) -> dict[str
     """Write numpy arrays as .npy files and register them with sc.addFile.
 
     Local mode reads them in place; cluster mode distributes once per
-    executor. Returns name → file basename for :func:`_load_arrays`.
+    executor. Returns name → file basename; a task maps them back with
+    ``np.load(SparkFiles.get(name), mmap_mode="r")`` (one page-cache copy
+    per node).
     """
     import tempfile
     import uuid as _uuid
@@ -228,18 +223,6 @@ def _ship_arrays(spark: SparkSession, arrays: dict[str, np.ndarray]) -> dict[str
         spark.sparkContext.addFile(path)
         out[name] = fname
     return out
-
-
-def _load_arrays(files: dict[str, str]) -> dict[str, np.ndarray]:
-    """mmap the shipped arrays inside a worker (one page-cache copy/node)."""
-    from pyspark import SparkFiles
-
-    # np.asarray strips the np.memmap subclass (a zero-copy view over the
-    # same pages) — fancy indexing through the subclass measurably drags
-    return {
-        name: np.asarray(np.load(SparkFiles.get(fname), mmap_mode="r"))
-        for name, fname in files.items()
-    }
 
 
 def _write(base: str, fingerprint: str, iteration: int, state: np.ndarray, delta: float):

@@ -49,7 +49,9 @@ def bcast_max_edges(spark) -> int:
 
     Resolution order: explicit ``spark.tcs.bcastMaxEdges`` conf override
     (malformed values raise — a silently ignored safety cap is worse than
-    no cap) → 10% of min(driver JVM max heap, ``spark.executor.memory``
+    no cap; larger values are clamped to ``BCAST_HARD_CAP_EDGES``, because
+    every broadcast-CSR kernel packs ids into int32 / 31-bit keys and
+    assumes n < 2^31) → 10% of min(driver JVM max heap, ``spark.executor.memory``
     when set) / 16 B, clamped to [20M floor, 256M hard cap]. The executor
     term matters in client mode: a 64 GB driver next to 4 GB executors
     must NOT size executor broadcasts from the driver's heap.
@@ -59,7 +61,8 @@ def bcast_max_edges(spark) -> int:
     except Exception:  # noqa: BLE001 — connect mode without conf access
         override = None
     if override is not None:
-        return int(override)  # ValueError on garbage, deliberately loud
+        # ValueError on garbage, deliberately loud
+        return min(int(override), BCAST_HARD_CAP_EDGES)
     try:
         mem = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
     except Exception:  # noqa: BLE001 — connect-mode / no JVM handle
@@ -96,8 +99,8 @@ def choose_iterative_tier(
     blocked_max_edges: int | None = None,
     assume_canonical: bool = False,
 ) -> str:
-    """"blocked" (CSR-in-memory broadcast tier) while the graph fits a
-    driver/executor vector, else "shuffle" — the same memory-fit statistic
+    """"blocked" (CSR-blocked in-memory tier) while the graph fits a
+    driver vector, else "shuffle" — the same memory-fit statistic
     the triangle planner uses, applied to PageRank/CC/label propagation so
     callers don't have to self-select the tier. Default cutoff is the
     memory-derived :func:`bcast_max_edges`."""

@@ -36,13 +36,14 @@ def synthetic_files(
     for w in weights:
         acc += w / total
         cum.append(acc)
-    # CASE WHEN u < cum[0] THEN 0 WHEN u < cum[1] THEN 1 ... (broadcast-free)
+    # repo = #{r < n_repos-1 : cum[r] <= u} — the first r with u < cum[r],
+    # because cum is monotone. A flat count over one array literal: a
+    # nested CASE WHEN per repo failed codegen at 300 repos and overflowed
+    # the driver stack at 400.
     df = spark.range(n_files).select(F.col("id"))
     u = (F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0)
-    repo_idx = F.lit(n_repos - 1)
-    expr = repo_idx
-    for r in range(n_repos - 2, -1, -1):
-        expr = F.when(u < F.lit(cum[r]), F.lit(r)).otherwise(expr)
+    thresholds = F.array(*[F.lit(c) for c in cum[: n_repos - 1]])
+    expr = F.size(F.filter(thresholds, lambda c: c <= u))
     h = F.xxhash64(F.col("id"), F.lit(seed + 1))
     return df.select(
         F.format_string("org/repo-%04d", expr).alias("repo"),
